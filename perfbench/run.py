@@ -13,12 +13,12 @@ another, local[nproc] Spark in a fresh JVM per iteration):
                     committed sf0.01 corpus, plus the bucketed ingest and
                     the sim3 index build (see scala/QuerySession.scala)
 
-An iteration is one JVM: set-up (JVM start, Spark session, machinery
-warm-up, input generation) then the timed run. Iterations repeat until
-`--seconds` of wall time is used (at least --min-iters); metrics are the
-medians over iterations. `--trace 1` alternates untraced and traced
-iterations: per-layer metrics come from the traced ones, and
-trace.overhead_frac compares their run_s with the untraced ones.
+A run is one iteration, one JVM: set-up (JVM start, Spark session,
+machinery warm-up, input generation) then the timed run. Its length is
+set by the workload (about a minute, BENCHMARK.json's run_seconds);
+`--seconds` is only recorded. `--trace 1` adds a traced iteration after
+the untraced one: per-layer metrics come from the traced one, and
+trace.overhead_frac compares its run_s with the untraced one's.
 
 The last stdout line is the JSON result; everything the run leaves
 behind is under .bench_build/ (work dirs are removed after each
@@ -29,10 +29,8 @@ import json
 import os
 import shutil
 import signal
-import statistics
 import subprocess
 import sys
-import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -168,15 +166,11 @@ def iteration(args, cp, i, traced, out_dir):
         return json.load(f), leaked
 
 
-def med(xs):
-    return statistics.median(xs) if xs else 0.0
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--seconds", type=float, default=30)
+    ap.add_argument("--seconds", type=float, default=60)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--poses", type=int, default=DEFAULT_POSES)
     ap.add_argument("--corpus", default=None,
@@ -187,6 +181,9 @@ def main():
                     help="with --record-digests: graft.Verify dump dir of "
                          "the same corpus the recorded digests must equal")
     args = ap.parse_args()
+    if args.record_digests and not args.certify:
+        ap.error("--record-digests needs --certify: recorded digests must "
+                 "equal those of a certified graft.Verify dump")
     args.corpus = args.corpus or CORPUS.get(args.workload)
 
     _, cp = build.build()
@@ -201,54 +198,32 @@ def main():
     git0 = git_status()
     load0 = host_load()
     steal0 = steal_s()
-    t0 = time.time()
-    results, traced_results = [], []
-    leaked = 0
-    i = 0
-    last = 0.0
-    # an untraced iteration first; in a traced run, traced ones alternate
-    while True:
-        traced = args.trace == 1 and i % 2 == 1
-        s = time.time()
-        r, lk = iteration(args, cp, i, traced, out_dir)
-        last = max(last, time.time() - s)
+    runs, leaked = [], 0
+    for i, trace_on in enumerate([False, True][:1 + args.trace]):
+        r, lk = iteration(args, cp, i, trace_on, out_dir)
         leaked += lk
         if r is None:
-            results.append(None)
-            break
-        (traced_results if traced else results).append(r)
-        i += 1
-        # stop when another iteration would overrun --seconds
-        if (not args.trace or traced_results) and \
-                (time.time() - t0) + last > args.seconds:
-            break
+            raise SystemExit(f"perfbench: iteration {i} gave no result")
+        runs.append(r)
     load1 = host_load()
     steal = steal_s() - steal0
     git1 = git_status()
 
-    ok_runs = [r for r in results if r is not None]
-    crashed = len(results) - len(ok_runs)
-    every = ok_runs + traced_results
-    attempted = sum(r["attempted"] for r in every) + crashed
-    failed = sum(r["failed"] for r in every) + crashed
+    attempted = sum(r["attempted"] for r in runs)
+    failed = sum(r["failed"] for r in runs)
     side_effects = git0 != git1
-    correct = (crashed == 0 and failed == 0 and leaked == 0
-               and not side_effects and bool(ok_runs))
+    correct = failed == 0 and leaked == 0 and not side_effects
 
     metrics = {}
     if args.trace == 0:
-        metrics["setup_s"] = (med([r["setup_s"] for r in ok_runs]), "s")
-        metrics["run_s"] = (med([r["run_s"] for r in ok_runs]), "s")
+        metrics["setup_s"] = (runs[0]["setup_s"], "s")
+        metrics["run_s"] = (runs[0]["run_s"], "s")
     else:
-        units = layer_units()
-        for name, unit in units.items():
-            vals = [r["layers"].get(name) for r in traced_results]
-            vals = [v for v in vals if v is not None]
-            metrics[name] = (med(vals), unit)
-        base = med([r["run_s"] for r in ok_runs])
-        traced_run = med([r["run_s"] for r in traced_results])
+        untraced, traced = runs
+        for name, unit in layer_units().items():
+            metrics[name] = (traced["layers"].get(name, 0.0), unit)
         metrics["trace.overhead_frac"] = (
-            traced_run / base - 1 if base > 0 else 0.0, "fraction")
+            traced["run_s"] / untraced["run_s"] - 1, "fraction")
         metrics["host.loadavg1_start"] = (load0[0], "load")
         metrics["host.loadavg1_end"] = (load1[0], "load")
         metrics["host.runnable_start"] = (load0[1], "count")
@@ -258,16 +233,16 @@ def main():
     record = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "seconds": args.seconds, "poses": args.poses, "corpus": args.corpus,
-        "iterations": len(every), "leaked_processes": leaked,
+        "iterations": len(runs), "leaked_processes": leaked,
         "side_effects": side_effects,
         "host_start": {"loadavg1": load0[0], "runnable": load0[1]},
         "host_end": {"loadavg1": load1[0], "runnable": load1[1]},
         "host_steal_s": steal,
-        "runs": every,
+        "runs": runs,
     }
     with open(os.path.join(out_dir, "result.json"), "w") as f:
         json.dump(record, f)
-    for r in every:
+    for r in runs:
         if r.get("failures"):
             sys.stderr.write(f"perfbench: failed: {r['failures']}\n")
     print(json.dumps({

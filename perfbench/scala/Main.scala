@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Arguments: `--workload capture_pipeline|query_floor --seed N
   * --trace 0|1 --work DIR --out FILE --data DIR --digests FILE
-  * [--poses P] [--record-digests FILE]`.
+  * [--poses P] [--record-digests FILE --certify DIR]`.
   */
 object Main {
 

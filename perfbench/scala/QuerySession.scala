@@ -39,6 +39,8 @@ object QuerySession {
     val queries = SparkEntry.queries
     require(queries.keySet == family.keySet,
       "SparkEntry.queries and the family lists disagree")
+    require(record.isEmpty || certify.nonEmpty,
+      "recorded digests must be certified against a graft.Verify dump")
     require(record.nonEmpty || expected.keySet == queries.keySet,
       s"digest file covers ${expected.size} queries, SparkEntry declares " +
         s"${queries.size}: ${(expected.keySet diff queries.keySet) ++ (queries.keySet diff expected.keySet)}")
@@ -90,7 +92,6 @@ object QuerySession {
       split(name) = (c, p, x)
     }
     graft.ops.Caches.releaseAll(spark)
-    record.foreach(f => Digests.save(f, sfDir, digests.toMap))
     // recording: the digests must equal those of graft.Verify's dumps
     // of the same corpus, which scripts/check.py certified
     certify.foreach { dir =>
@@ -103,11 +104,13 @@ object QuerySession {
         s"${digests.size - bad.size} equal, ${bad.size} differ ${bad.mkString(",")}")
       require(bad.isEmpty, s"digests differ from the Verify dumps: $bad")
     }
+    record.foreach(f => Digests.save(f, sfDir, digests.toMap))
 
     val qOps = ops.filter(o => queries.contains(o.name))
     val walls = qOps.map(_.wall).sorted
     val n = walls.size
-    // the highest percentile with at least 10 queries beyond it
+    // the highest percentile with at least 10 queries beyond it: the
+    // 11th-largest wall, at percentile 100 * (tailIdx + 1) / n
     val tailIdx = (n - 11).max(0)
     val layers = mutable.LinkedHashMap.empty[String, Double]
     layers("query_p50_s") = median(walls.toSeq)
@@ -127,7 +130,7 @@ object QuerySession {
       ops.find(_.name == "index_build").get.wall
     Main.Outcome(ops.toSeq,
       Map("order" -> order,
-        "query_tail_pct" -> 100.0 * (n - tailIdx - 1).max(0) / n.max(1),
+        "query_tail_pct" -> 100.0 * (tailIdx + 1) / n.max(1),
         "query_n" -> n,
         "split" -> split.map { case (k, (c, p, x)) =>
           k -> Map("construct_s" -> c, "plan_s" -> p, "exec_s" -> x) }),

@@ -41,14 +41,22 @@ final class Trace(sc: SparkContext, val enabled: Boolean) {
     }
   }
 
-  /** Stop listening; all events posted so far are delivered first. */
+  /** Stop listening once every event posted so far has been delivered.
+    * The listener bus is asynchronous, so a job that has ended may not
+    * have been seen to start yet. Events arrive in order: when the end of
+    * a marker job submitted now has arrived, so has every earlier event.
+    * The marker job itself is left out of the counts.
+    */
   def close(): Unit = if (enabled) {
+    sc.setLocalProperty(MarkerKey, "true")
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.setLocalProperty(MarkerKey, null)
     val t0 = System.nanoTime()
-    // the listener bus is asynchronous: wait until every job we saw
-    // start has also been seen to end, so no task metrics are lost
-    while (listener.open > 0 && System.nanoTime() - t0 < 30e9)
+    while (!listener.markerEnded && System.nanoTime() - t0 < 60e9)
       Thread.sleep(5)
     sc.removeSparkListener(listener)
+    require(listener.markerEnded,
+      "the listener bus did not deliver the marker job's end within 60 s")
   }
 
   def jobs: Seq[Job] = listener.jobs.asScala.toSeq
@@ -72,6 +80,7 @@ final class Trace(sc: SparkContext, val enabled: Boolean) {
 
 object Trace {
   val SpanKey = "perfbench.span"
+  val MarkerKey = "perfbench.marker"
 
   final case class Span(id: Int, parent: Int, name: String, start: Long,
       var end: Long)
@@ -96,7 +105,8 @@ object Trace {
     private val byId = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     private val execSites =
       new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    @volatile var open = 0
+    @volatile private var markerJob = -1
+    @volatile var markerEnded = false
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
@@ -104,7 +114,12 @@ object Trace {
       case _ =>
     }
 
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(_.getProperty(MarkerKey) != null))
+        markerJob = e.jobId
+      else jobStart(e)
+
+    private def jobStart(e: SparkListenerJobStart): Unit = {
       val span = Option(e.properties)
         .flatMap(p => Option(p.getProperty(SpanKey)))
         .map(_.toInt).getOrElse(-1)
@@ -116,13 +131,11 @@ object Trace {
         .getOrElse("")
       val j = Job(e.jobId, span, site, e.stageIds, e.time)
       jobs.add(j); byId.put(e.jobId, j)
-      open += 1
     }
 
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-      Option(byId.get(e.jobId)).foreach(_.end = e.time)
-      open -= 1
-    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (e.jobId == markerJob) markerEnded = true
+      else Option(byId.get(e.jobId)).foreach(_.end = e.time)
 
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
       submitted.put(e.stageInfo.stageId,

@@ -1,16 +1,14 @@
 #!/usr/bin/env python3
 """Stall-separation demo: the same traced run, alone and beside CPU burners.
 
-    python3 perfbench/stalldemo.py [--workload query_floor] [--seed 1]
-                                   [--burners 4]
+    python3 perfbench/stalldemo.py
 
-Runs `run.py --trace 1` once quietly and once with N `yes > /dev/null`
-processes competing for the cores, then prints both runs' wall times, the
-in-band stall evidence (loadavg, runnable processes) and the counts and CPU
-time that should not move: job/stage/task counts and shuffle bytes equal,
-executor CPU within ~15 %.
+Runs `run.py --workload query_floor --seed 1 --trace 1` once quietly and
+once with 4 `yes > /dev/null` processes competing for the cores, then
+prints both runs' wall times, the in-band stall evidence (loadavg, runnable
+processes) and the counts and CPU time that should not move: job/stage/task
+counts and shuffle bytes equal, executor CPU within ~15 %.
 """
-import argparse
 import json
 import os
 import subprocess
@@ -18,6 +16,9 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+WORKLOAD = "query_floor"
+SEED = 1
+BURNERS = 4
 
 SAME = ["spark.jobs", "spark.stages", "spark.tasks",
         "spark.shuffle_write_bytes", "spark.shuffle_read_bytes"]
@@ -27,14 +28,14 @@ SHOW = ["host.loadavg1_start", "host.loadavg1_end", "host.runnable_start",
         "jvm.process_cpu_s"]
 
 
-def traced(workload, seed):
+def traced():
     r = subprocess.run([sys.executable, os.path.join(HERE, "run.py"),
-                        "--workload", workload, "--seed", str(seed),
-                        "--seconds", "1", "--trace", "1"], cwd=ROOT,
+                        "--workload", WORKLOAD, "--seed", str(SEED),
+                        "--seconds", "60", "--trace", "1"], cwd=ROOT,
                        stdout=subprocess.PIPE, text=True, check=True)
     line = json.loads(r.stdout.strip().splitlines()[-1])
     out = os.path.join(ROOT, ".bench_build", "out",
-                       f"{workload}-seed{seed}-trace1", "result.json")
+                       f"{WORKLOAD}-seed{SEED}-trace1", "result.json")
     with open(out) as f:
         runs = json.load(f)["runs"]
     walls = {("traced" if x["trace"] else "untraced"): x["run_s"] for x in runs}
@@ -42,16 +43,11 @@ def traced(workload, seed):
 
 
 def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", default="query_floor")
-    ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--burners", type=int, default=4)
-    a = ap.parse_args()
-    quiet, qwall = traced(a.workload, a.seed)
+    quiet, qwall = traced()
     burners = [subprocess.Popen(["yes"], stdout=subprocess.DEVNULL)
-               for _ in range(a.burners)]
+               for _ in range(BURNERS)]
     try:
-        busy, bwall = traced(a.workload, a.seed)
+        busy, bwall = traced()
     finally:
         for b in burners:
             b.kill()
