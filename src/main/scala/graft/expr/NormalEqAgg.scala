@@ -19,27 +19,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * `normal_eq_agg(r_u, r_v, j0u, j0v, ..., j5u, j5v)` → array<double>[28]
   * laid out [cost, jtj(0,0), jtj(0,1)..jtj(0,5), jtj(1,1).., jtj(5,5),
-  * jtr(0)..jtr(5)] — the exact 28 values Extrinsic.refine previously
-  * computed as 28 separate sum() columns (extrinsic_calibration.py's
-  * scipy least_squares boundary). The caller binds the 14 inputs to
-  * pre-projected attribute columns, so the deep projection/distortion
-  * expression trees stay in whole-stage codegen and each residual is
-  * evaluated exactly once per row; the aggregate itself only reads 14
-  * doubles. Rows with any null input (masked corners) are skipped whole,
-  * matching sum()'s null-skipping per row since every term shares the
-  * same inputs.
+  * jtr(0)..jtr(5)] (extrinsic_calibration.py's scipy least_squares
+  * boundary). The fold itself lives in the companion object, which
+  * Extrinsic.refine's typed pass shares, so the SQL surface and the
+  * solver accumulate identically. Rows with any null input (masked
+  * corners) are skipped whole, matching sum()'s null-skipping per row
+  * since every term shares the same inputs.
   */
 case class NormalEqAgg(children: Seq[Expression],
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[Array[Double]] {
-
-  private val P = 6 // parameters
-  private val N = 1 + P * (P + 1) / 2 + P // cost + upper-tri JtJ + Jtr
+  import NormalEqAgg._
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (children.length != 2 * (P + 1))
+    if (children.length != Inputs)
       TypeCheckResult.TypeCheckFailure(
-        s"normal_eq_agg takes ${2 * (P + 1)} arguments (r_u, r_v, " +
+        s"normal_eq_agg takes $Inputs arguments (r_u, r_v, " +
           s"then $P Jacobian (u,v) pairs), got ${children.length}")
     else if (children.exists(_.dataType != DoubleType))
       TypeCheckResult.TypeCheckFailure(
@@ -62,34 +57,19 @@ case class NormalEqAgg(children: Seq[Expression],
 
   override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
     val r = proj(input)
-    val v = new Array[Double](2 * (P + 1))
+    val v = new Array[Double](Inputs)
     var i = 0
     while (i < v.length) {
       if (r.isNullAt(i)) return buf // masked observation: skip the whole row
       v(i) = r.getDouble(i)
       i += 1
     }
-    val ru = v(0); val rv = v(1)
-    buf(0) += ru * ru + rv * rv
-    var idx = 1
-    var a = 0
-    while (a < P) {
-      val jau = v(2 + 2 * a); val jav = v(3 + 2 * a)
-      var b = a
-      while (b < P) {
-        buf(idx) += jau * v(2 + 2 * b) + jav * v(3 + 2 * b)
-        idx += 1
-        b += 1
-      }
-      buf(1 + P * (P + 1) / 2 + a) += jau * ru + jav * rv
-      a += 1
-    }
+    fold(buf, v)
     buf
   }
 
   override def merge(buf: Array[Double], other: Array[Double]): Array[Double] = {
-    var i = 0
-    while (i < N) { buf(i) += other(i); i += 1 }
+    NormalEqAgg.merge(buf, other)
     buf
   }
 
@@ -118,4 +98,39 @@ case class NormalEqAgg(children: Seq[Expression],
     copy(children = newChildren)
 
   override def prettyName: String = "normal_eq_agg"
+}
+
+/** The accumulator's layout and fold, shared with the typed LM pass of
+  * `graft.pipeline.Extrinsic.refine`, which folds the same 14 inputs per
+  * row inside a task closure instead of through this aggregate.
+  */
+object NormalEqAgg {
+  val P = 6 // parameters
+  val Inputs = 2 * (P + 1) // r_u, r_v, then P Jacobian (u, v) pairs
+  val N = 1 + P * (P + 1) / 2 + P // cost + upper-tri JtJ + Jtr
+
+  /** Fold one observation's `Inputs` values into the N-double buffer. */
+  def fold(buf: Array[Double], v: Array[Double]): Unit = {
+    val ru = v(0); val rv = v(1)
+    buf(0) += ru * ru + rv * rv
+    var idx = 1
+    var a = 0
+    while (a < P) {
+      val jau = v(2 + 2 * a); val jav = v(3 + 2 * a)
+      var b = a
+      while (b < P) {
+        buf(idx) += jau * v(2 + 2 * b) + jav * v(3 + 2 * b)
+        idx += 1
+        b += 1
+      }
+      buf(1 + P * (P + 1) / 2 + a) += jau * ru + jav * rv
+      a += 1
+    }
+  }
+
+  /** Add a partial buffer into `buf`. */
+  def merge(buf: Array[Double], other: Array[Double]): Unit = {
+    var i = 0
+    while (i < N) { buf(i) += other(i); i += 1 }
+  }
 }

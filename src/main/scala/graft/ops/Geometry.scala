@@ -162,30 +162,48 @@ object Geometry {
   }
 
   /** Full cv2 rational-model projection (extrinsic_calibration.py:114-124
-    * via cv2.projectPoints): camera-frame (x,y,z) -> pixels, with
-    * radial (1 + k1 r² + k2 r⁴ + k3 r⁶)/(1 + k4 r² + k5 r⁴ + k6 r⁶) and
-    * tangential p1,p2. `dist` is the OpenCV 14-vector
-    * [k1,k2,p1,p2,k3,k4,k5,k6,s1..s4,τx,τy] (s/τ unused — the reference
-    * calibrates with CALIB_RATIONAL_MODEL|FIX_K3..K5, camera_calib.py:101,
-    * so its only nonzero denominator term is k6 r⁶).
+    * via cv2.projectPoints) as a scalar kernel: camera-frame (x,y,z) ->
+    * pixels, with radial (1 + k1 r² + k2 r⁴ + k3 r⁶)/(1 + k4 r² + k5 r⁴ +
+    * k6 r⁶) and tangential p1,p2. `dist8` is the head of the OpenCV
+    * 14-vector [k1,k2,p1,p2,k3,k4,k5,k6,s1..s4,τx,τy] (s/τ unused — the
+    * reference calibrates with CALIB_RATIONAL_MODEL|FIX_K3..K5,
+    * camera_calib.py:101, so its only nonzero denominator term is k6 r⁶).
+    *
+    * The calibration solvers (pipeline.Intrinsic, pipeline.Extrinsic)
+    * evaluate it per row inside task closures: a case class is
+    * serializable, so the camera travels to the executors as data rather
+    * than as literals baked into Catalyst trees that every LM step would
+    * re-analyze, re-optimize and re-codegen.
     */
-  def projectPointCv(
-      x: Column, y: Column, z: Column,
-      k: Seq[Double], dist: Seq[Double]): (Column, Column) = {
-    require(k.length == 9 && dist.length >= 8)
-    val Seq(k1, k2, p1, p2, k3, k4, k5, k6) = dist.take(8)
-    val (fx, fy, cx, cy) = (k(0), k(4), k(2), k(5))
-    val xn = x / z
-    val yn = y / z
-    val r2 = xn * xn + yn * yn
-    val radial =
-      (lit(1.0) + lit(k1) * r2 + lit(k2) * r2 * r2 + lit(k3) * r2 * r2 * r2) /
-      (lit(1.0) + lit(k4) * r2 + lit(k5) * r2 * r2 + lit(k6) * r2 * r2 * r2)
-    val xd = xn * radial + lit(2.0 * p1) * xn * yn +
-      lit(p2) * (r2 + lit(2.0) * xn * xn)
-    val yd = yn * radial + lit(p1) * (r2 + lit(2.0) * yn * yn) +
-      lit(2.0 * p2) * xn * yn
-    (lit(fx) * xd + lit(cx), lit(fy) * yd + lit(cy))
+  final case class CvCamera(fx: Double, fy: Double, cx: Double, cy: Double,
+      dist8: Seq[Double]) {
+    require(dist8.length == 8, "dist8 = [k1,k2,p1,p2,k3,k4,k5,k6]")
+    private[this] val k1 = dist8(0)
+    private[this] val k2 = dist8(1)
+    private[this] val p1 = dist8(2)
+    private[this] val p2 = dist8(3)
+    private[this] val k3 = dist8(4)
+    private[this] val k4 = dist8(5)
+    private[this] val k5 = dist8(6)
+    private[this] val k6 = dist8(7)
+
+    def project(x: Double, y: Double, z: Double): (Double, Double) = {
+      val xn = x / z; val yn = y / z
+      val r2 = xn * xn + yn * yn
+      val radial = (1 + k1 * r2 + k2 * r2 * r2 + k3 * r2 * r2 * r2) /
+        (1 + k4 * r2 + k5 * r2 * r2 + k6 * r2 * r2 * r2)
+      val xd = xn * radial + 2 * p1 * xn * yn + p2 * (r2 + 2 * xn * xn)
+      val yd = yn * radial + p1 * (r2 + 2 * yn * yn) + 2 * p2 * xn * yn
+      (fx * xd + cx, fy * yd + cy)
+    }
+  }
+
+  object CvCamera {
+    /** From a row-major 3x3 K and an OpenCV distortion vector (>= 8). */
+    def apply(k: Seq[Double], dist: Seq[Double]): CvCamera = {
+      require(k.length == 9 && dist.length >= 8)
+      CvCamera(k(0), k(4), k(2), k(5), dist.take(8))
+    }
   }
 
   /** Apply a 3x3 homography (row-major 9 doubles) to a 2D point

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.expr.NormalEqAgg
 import graft.ops.Geometry
 
 /** The reference's extrinsic-calibration composite (SURVEY.md §2.9;
@@ -11,16 +13,23 @@ import graft.ops.Geometry
   *   B. init: per-pose planar PnP via mapGroups over the first N poses,
   *      column-mean of rvec/tvec (extrinsic_calibration.py:41-79)
   *   C. refine: driver-side Levenberg-Marquardt on the 6 params, where
-  *      every iteration's J^T J / J^T r / cost are ONE distributed
-  *      aggregation over the corner table (the Spark MLlib pattern —
-  *      at 100 TB each iteration is a single shuffle-light pass)
+  *      every evaluation (normal equations, candidate cost) is ONE typed
+  *      pass over the corner table (the Spark MLlib pattern — at 100 TB
+  *      each iteration is a single shuffle-free pass returning 28 doubles
+  *      per partition)
   *   D. evaluate: per-point reprojection error -> per-pose mean -> grand
   *      stats (X5 / A2 / A1), golden-matched against camera_extrinsic.npz
   *
-  * All per-point math is Catalyst expressions (Geometry.projectPointCv);
-  * only the 6-parameter solve itself lives on the driver.
+  * Per-point math is the scalar projector `Geometry.CvCamera` run inside
+  * task closures, with the camera and the parameters carried as data in
+  * a serializable `ExtrinsicKernel`: the passes are planned once per
+  * corner table, not once per LM step. Only the 6-parameter solve itself
+  * lives on the driver; the error statistics stay DataFrame aggregates.
   */
 object Extrinsic {
+
+  /** One corner observation: detected pixel (u, v), world point (x, y, z). */
+  type Obs = (Double, Double, Double, Double, Double)
 
   /** (pose_id, ord, corner_idx, u, v, x, y, z) — pixel+world corners. */
   def loadCorners(spark: SparkSession, fixturesDir: String): DataFrame = {
@@ -30,32 +39,41 @@ object Extrinsic {
     pix.join(wld, Seq("pose_id", "corner_idx"))
   }
 
-  /** Per-point reprojection error for a given extrinsic T (row-major 16):
-    * world -> camera (X6) -> project (X9, full cv2 rational model) ->
-    * Euclidean distance to the detected pixel (X5).
+  /** The corner table as typed observations. A row with a null field is
+    * a masked corner and is dropped whole, as `normal_eq_agg` and the SQL
+    * aggregates skip a row whose residuals are null.
     *
-    * World coordinates are quantized through float32 first — the reference
-    * casts them with dtype=np.float32 before cv2.projectPoints
-    * (extrinsic_calibration.py:197-198), and the golden
+    * With `quantize`, world coordinates are rounded through float32 first
+    * — the reference casts them with dtype=np.float32 before
+    * cv2.projectPoints (extrinsic_calibration.py:197-198), and the golden
     * reprojection_stats are only reproducible to 1e-6 with that
     * quantization (verified: max deviation 7e-14 with it, 4e-5 without).
     */
-  def withErrors(corners: DataFrame, k: Seq[Double], dist: Seq[Double],
-      t: Seq[Double]): DataFrame = {
-    def f32(c: org.apache.spark.sql.Column) = c.cast("float").cast("double")
-    val (cx, cy, cz) = Geometry.rigidTransform(t,
-      f32(col("x")), f32(col("y")), f32(col("z")))
-    val (u, v) = Geometry.projectPointCv(cx, cy, cz, k, dist)
-    corners.withColumn("err",
-      Geometry.norm2(u - col("u"), v - col("v")))
+  private[graft] def observations(corners: DataFrame, quantize: Boolean)
+      : Dataset[Obs] = {
+    val spark = corners.sparkSession
+    import spark.implicits._
+    def world(c: String) =
+      if (quantize) col(c).cast("float").cast("double") else col(c).cast("double")
+    corners.na.drop(Seq("u", "v", "x", "y", "z"))
+      .select(col("u").cast("double"), col("v").cast("double"),
+        world("x"), world("y"), world("z"))
+      .as[Obs]
   }
 
-  /** Stage D: mean/std_pop/max/min/median/RMSE over all point errors
-    * (extrinsic_calibration.py:216-226). Returns the 6 stats.
+  /** Stage D: per-point reprojection error (world -> camera (X6) ->
+    * project (X9, full cv2 rational model) -> Euclidean distance to the
+    * detected pixel (X5)) in one typed map, then mean/std_pop/max/min/
+    * median/RMSE over all point errors (extrinsic_calibration.py:216-226).
+    * `t` is the extrinsic (row-major 4x4). Returns the 6 stats.
     */
   def reprojectionStats(corners: DataFrame, k: Seq[Double],
       dist: Seq[Double], t: Seq[Double]): Map[String, Double] = {
-    val e = withErrors(corners, k, dist, t)
+    val spark = corners.sparkSession
+    import spark.implicits._
+    val ker = ExtrinsicKernel(Geometry.CvCamera(k, dist), Array(t.toArray), 0.0)
+    val e = observations(corners, quantize = true)
+      .map(o => ker.error(o)).toDF("err")
     val r = e.agg(
       avg("err"), stddev_pop(col("err")), max("err"), min("err"),
       median(col("err")), sqrt(avg(col("err") * col("err")))).collect()(0)
@@ -145,27 +163,42 @@ object Extrinsic {
     x
   }
 
-  /** Stage C: Levenberg-Marquardt over [rvec,tvec]. Each iteration
-    * projects the base + 6 finite-difference residual expressions to 14
-    * named columns (whole-stage codegen evaluates each residual tree
-    * once per row) and folds them through ONE `normal_eq_agg` — a single
-    * TypedImperativeAggregate whose 28-double buffer (cost, J^T J upper
-    * triangle, J^T r) partial-aggregates map-side, so one iteration
-    * shuffles #partitions x 28 doubles and exactly 28 doubles cross the
-    * driver boundary (SURVEY §4's 100-TB accumulator form; previously 28
-    * separate sum() columns).
+  /** Kernel of one LM evaluation at `p`: T at p, then T at p with each
+    * parameter stepped by `eps` (the forward-difference Jacobian).
+    */
+  private[graft] def lmKernel(cam: Geometry.CvCamera, p: Array[Double],
+      eps: Double): ExtrinsicKernel =
+    ExtrinsicKernel(cam, (paramsToT(p.toSeq) +: (0 until 6).map { i =>
+      val pi = p.clone(); pi(i) += eps
+      paramsToT(pi.toSeq)
+    }).map(_.toArray).toArray, eps)
+
+  /** One normal-equation pass: `normal_eq_agg`'s 28 doubles (cost, J^T J
+    * upper triangle, J^T r) over `obs`. Each partition folds its rows
+    * through NormalEqAgg's shared routine; the driver adds the
+    * per-partition buffers in partition order, so the sum does not
+    * depend on which task finishes first.
+    */
+  private[graft] def normalEquations(obs: RDD[Obs],
+      ker: ExtrinsicKernel): Array[Double] = {
+    val buf = new Array[Double](NormalEqAgg.N)
+    obs.mapPartitions(rows => ker.normalEq(rows)).collect()
+      .foreach(NormalEqAgg.merge(buf, _))
+    buf
+  }
+
+  /** Stage C: Levenberg-Marquardt over [rvec,tvec]. Each iteration is one
+    * normal-equation pass plus one candidate-cost pass per damping try,
+    * each a typed `mapPartitions` over the (cached) corner table whose
+    * task closure carries the current parameters as data. The passes
+    * are planned once, as `obs` below; an LM step only ships new doubles.
+    * Returns the parameters and the cost at them.
     */
   def refine(corners: DataFrame, k: Seq[Double], dist: Seq[Double],
       init: Seq[Double], maxIter: Int = 50, eps: Double = 1e-6)
       : (Seq[Double], Double) = {
-    graft.expr.GraftFunctions.register(corners.sparkSession)
-
-    def residualCols(p: Seq[Double]) = {
-      val t = paramsToT(p)
-      val (cx, cy, cz) = Geometry.rigidTransform(t, col("x"), col("y"), col("z"))
-      val (u, v) = Geometry.projectPointCv(cx, cy, cz, k, dist)
-      (u - col("u"), v - col("v"))
-    }
+    val cam = Geometry.CvCamera(k, dist)
+    val obs = observations(corners, quantize = false).rdd
 
     var p = init.toArray
     var lambda = 1e-3
@@ -173,21 +206,7 @@ object Extrinsic {
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      val (r0u, r0v) = residualCols(p.toSeq)
-      val diffs = (0 until 6).map { i =>
-        val pi = p.clone(); pi(i) += eps
-        val (ru, rv) = residualCols(pi.toSeq)
-        ((ru - r0u) / eps, (rv - r0v) / eps)
-      }
-      val named = corners.select(
-        Seq(r0u.as("_ru"), r0v.as("_rv")) ++
-          diffs.zipWithIndex.flatMap { case ((ju, jv), i) =>
-            Seq(ju.as(s"_j${i}u"), jv.as(s"_j${i}v"))
-          }: _*)
-      val args = (Seq("_ru", "_rv") ++
-        (0 until 6).flatMap(i => Seq(s"_j${i}u", s"_j${i}v"))).mkString(", ")
-      val row = named.agg(expr(s"normal_eq_agg($args)").as("ne")).collect()(0)
-      val ne = row.getSeq[Double](0)
+      val ne = normalEquations(obs, lmKernel(cam, p, eps))
       val c0 = ne(0)
       val jtj = Array.ofDim[Double](6, 6)
       var idx = 1
@@ -204,8 +223,9 @@ object Extrinsic {
           jtj(i)(j) + (if (i == j) lambda * jtj(i)(i) else 0.0))
         val step = solve6(damped, jtr.map(-_))
         val cand = p.zip(step).map { case (a, b) => a + b }
-        val (cu, cv) = residualCols(cand.toSeq)
-        val cCand = corners.agg(sum(cu * cu + cv * cv)).collect()(0).getDouble(0)
+        val ker = ExtrinsicKernel(cam, Array(paramsToT(cand.toSeq).toArray), eps)
+        val cCand = obs.mapPartitions(rows => ker.cost(rows)).collect()
+          .foldLeft(0.0)(_ + _)
         if (cCand < c0) {
           if (math.abs(c0 - cCand) < 1e-9 * c0) converged = true
           p = cand; cost = cCand; lambda = (lambda / 3).max(1e-12)
@@ -300,5 +320,66 @@ object Extrinsic {
       aligned.map(_._1).sum / n, aligned.map(_._2).sum / n,
       aligned.map(_._3).sum / n, aligned.map(_._4).sum / n,
       aligned.map(_._5).sum / n, aligned.map(_._6).sum / n)
+  }
+}
+
+/** The per-row math of one extrinsic evaluation, kept outside `object
+  * Extrinsic` so a task closure captures only this holder: the camera and
+  * the transforms are plain fields, shipped as data with each task.
+  * `ts(0)` is the evaluated extrinsic (row-major 4x4); for a normal-
+  * equation pass `ts(1..6)` are the extrinsics at each parameter stepped
+  * by `eps`.
+  */
+private[graft] final case class ExtrinsicKernel(cam: Geometry.CvCamera,
+    ts: Array[Array[Double]], eps: Double) {
+  import Extrinsic.Obs
+
+  /** (projected - detected) pixel residual of `o` under the extrinsic `t`. */
+  def residual(t: Array[Double], o: Obs): (Double, Double) = {
+    val (u, v, x, y, z) = o
+    val (pu, pv) = cam.project(
+      t(0) * x + t(1) * y + t(2) * z + t(3),
+      t(4) * x + t(5) * y + t(6) * z + t(7),
+      t(8) * x + t(9) * y + t(10) * z + t(11))
+    (pu - u, pv - v)
+  }
+
+  /** Reprojection error of `o` under `ts(0)`. */
+  def error(o: Obs): Double = {
+    val (du, dv) = residual(ts(0), o)
+    math.sqrt(du * du + dv * dv)
+  }
+
+  /** `normal_eq_agg`'s inputs for `o`: (r_u, r_v), then each parameter's
+    * forward-difference Jacobian (u, v) pair.
+    */
+  def terms(o: Obs): Array[Double] = {
+    val out = new Array[Double](NormalEqAgg.Inputs)
+    val (r0u, r0v) = residual(ts(0), o)
+    out(0) = r0u; out(1) = r0v
+    var i = 1
+    while (i < ts.length) {
+      val (ru, rv) = residual(ts(i), o)
+      out(2 * i) = (ru - r0u) / eps; out(2 * i + 1) = (rv - r0v) / eps
+      i += 1
+    }
+    out
+  }
+
+  /** One partition's normal-equation buffer. */
+  def normalEq(rows: Iterator[Obs]): Iterator[Array[Double]] = {
+    val buf = new Array[Double](NormalEqAgg.N)
+    rows.foreach(o => NormalEqAgg.fold(buf, terms(o)))
+    Iterator.single(buf)
+  }
+
+  /** One partition's sum of squared residuals under `ts(0)`. */
+  def cost(rows: Iterator[Obs]): Iterator[Double] = {
+    var s = 0.0
+    rows.foreach { o =>
+      val (ru, rv) = residual(ts(0), o)
+      s += ru * ru + rv * rv
+    }
+    Iterator.single(s)
   }
 }

@@ -19,16 +19,18 @@ import graft.ops.Geometry
   *      (the algorithm inside cv2.calibrateCamera's init, public knowledge);
   *      driver-side on #views x 9 doubles;
   *   3. LM bundle polish over [fx,fy,cx,cy,k1,k2,p1,p2,k6] + 6 params/view
-  *      — driver-side on the collected per-view point sets. This mirrors
-  *      the reference exactly: cv2.calibrateCamera IS a single driver call
+  *      — driver-side on the collected per-view point sets, with a
+  *      block-sparse Jacobian (see refineBundle). This mirrors the
+  *      reference exactly: cv2.calibrateCamera IS a single driver call
   *      over in-memory point lists (SURVEY.md §2.8 "driver-side after Spark
   *      collects per-image point sets"). The collect is bounded by
   *      #views x #corners (15 x 99 here) — intrinsic calibration input is
   *      a handful of chessboard views regardless of corpus scale, so this
   *      is NOT a 100-TB funnel; the 100-TB-sized tables never pass here.
-  *   4. mean reprojection error evaluated DISTRIBUTED with the same
-  *      Catalyst expressions used everywhere else (Geometry.rodrigues +
-  *      projectPointCv), per camera_calib.py:104-113.
+  *   4. mean reprojection error evaluated DISTRIBUTED: the per-corner
+  *      residual is the scalar projector `Geometry.CvCamera` in a typed
+  *      map (the same one the bundle and Extrinsic use), the per-view and
+  *      grand means are DataFrame aggregates, per camera_calib.py:104-113.
   *
   * Distortion parameterization follows the reference's flags
   * (CALIB_RATIONAL_MODEL | FIX_K3..K5, camera_calib.py:101-102): free
@@ -263,55 +265,66 @@ object Intrinsic {
   // 3. LM bundle polish (driver, bounded by #views x #corners)
   // ------------------------------------------------------------------
 
-  /** Scalar twin of Geometry.projectPointCv for the driver-side bundle:
-    * board point (X, Y, 0) -> rotate/translate -> rational-model project.
-    * dist8 = [k1,k2,p1,p2,k3,k4,k5,k6].
+  /** Board point (X, Y, 0) -> rotate/translate by the view pose (r9
+    * row-major, t) -> the camera's rational-model projection.
     */
-  def projectCvScalar(fx: Double, fy: Double, cx: Double, cy: Double,
-      dist8: Array[Double], r9: Array[Double], t: Array[Double],
-      xw: Double, yw: Double): (Double, Double) = {
-    val xc = r9(0) * xw + r9(1) * yw + t(0)
-    val yc = r9(3) * xw + r9(4) * yw + t(1)
-    val zc = r9(6) * xw + r9(7) * yw + t(2)
-    val xn = xc / zc; val yn = yc / zc
-    val r2 = xn * xn + yn * yn
-    val Array(k1, k2, p1, p2, k3, k4, k5, k6) = dist8
-    val radial = (1 + k1 * r2 + k2 * r2 * r2 + k3 * r2 * r2 * r2) /
-      (1 + k4 * r2 + k5 * r2 * r2 + k6 * r2 * r2 * r2)
-    val xd = xn * radial + 2 * p1 * xn * yn + p2 * (r2 + 2 * xn * xn)
-    val yd = yn * radial + p1 * (r2 + 2 * yn * yn) + 2 * p2 * xn * yn
-    (fx * xd + cx, fy * yd + cy)
-  }
+  def projectBoard(cam: Geometry.CvCamera, r9: Array[Double],
+      t: Array[Double], xw: Double, yw: Double): (Double, Double) =
+    cam.project(
+      r9(0) * xw + r9(1) * yw + t(0),
+      r9(3) * xw + r9(4) * yw + t(1),
+      r9(6) * xw + r9(7) * yw + t(2))
+
+  /** The camera of bundle parameters p = [fx,fy,cx,cy,k1,k2,p1,p2,k6,..]. */
+  private def bundleCamera(p: Array[Double]): Geometry.CvCamera =
+    Geometry.CvCamera(p(0), p(1), p(2), p(3),
+      Seq(p(4), p(5), p(6), p(7), 0.0, 0.0, 0.0, p(8)))
 
   /** LM over the bundle [fx,fy,cx,cy,k1,k2,p1,p2,k6] ++ 6/view.
     * `viewPts(v)` = that view's (X, Y, u, v) corners. Pure-Scala numeric
-    * Jacobian (central differences) — at #views x #corners points this is
-    * microseconds per iteration, the same boundary the reference crosses
-    * when it hands its point lists to cv2.calibrateCamera.
+    * Jacobian (central differences) — the same boundary the reference
+    * crosses when it hands its point lists to cv2.calibrateCamera.
+    *
+    * The Jacobian is block-sparse: a residual of view v depends on the 9
+    * shared parameters and on view v's 6 only. So a per-view column
+    * re-projects only that view's corners, and J^T J / J^T r accumulate
+    * each residual row's 15 non-zeros. The dense form's other terms are
+    * exact zeros (both differences re-project identical inputs), and
+    * adding a zero leaves a sum unchanged, so the solve is bit-identical
+    * to the dense one.
     */
   def refineBundle(viewPts: IndexedSeq[Seq[(Double, Double, Double, Double)]],
       init: Array[Double], maxIter: Int = 80): Array[Double] = {
     val nViews = viewPts.length
     val nParams = 9 + 6 * nViews
     require(init.length == nParams)
+    val pts = viewPts.map(_.toArray)
+    // view v owns residual rows [first(v), first(v + 1)), (u, v) per corner
+    val first = pts.scanLeft(0)((o, ps) => o + 2 * ps.length)
+    val nRes = first(nViews)
+
+    /** View v's residuals under camera `cam` and the pose in `p`, written
+      * into `out` at first(v).
+      */
+    def viewResiduals(p: Array[Double], cam: Geometry.CvCamera, v: Int,
+        out: Array[Double]): Unit = {
+      val base = 9 + 6 * v
+      val r9 = Extrinsic.rodriguesScalar(
+        Seq(p(base), p(base + 1), p(base + 2)))
+      val t = Array(p(base + 3), p(base + 4), p(base + 5))
+      var i = first(v)
+      pts(v).foreach { case (xw, yw, u, vv) =>
+        val (up, vp) = projectBoard(cam, r9, t, xw, yw)
+        out(i) = up - u; out(i + 1) = vp - vv
+        i += 2
+      }
+    }
 
     def residuals(p: Array[Double]): Array[Double] = {
-      val dist8 = Array(p(4), p(5), p(6), p(7), 0.0, 0.0, 0.0, p(8))
-      val out = Array.newBuilder[Double]
-      var v = 0
-      while (v < nViews) {
-        val base = 9 + 6 * v
-        val r9 = Extrinsic.rodriguesScalar(
-          Seq(p(base), p(base + 1), p(base + 2)))
-        val t = Array(p(base + 3), p(base + 4), p(base + 5))
-        viewPts(v).foreach { case (xw, yw, u, vv) =>
-          val (up, vp) =
-            projectCvScalar(p(0), p(1), p(2), p(3), dist8, r9, t, xw, yw)
-          out += (up - u); out += (vp - vv)
-        }
-        v += 1
-      }
-      out.result()
+      val out = new Array[Double](nRes)
+      val cam = bundleCamera(p)
+      (0 until nViews).foreach(v => viewResiduals(p, cam, v, out))
+      out
     }
 
     var p = init.clone()
@@ -320,31 +333,50 @@ object Intrinsic {
     var lambda = 1e-3
     var iter = 0
     var converged = false
-    val nRes = r.length
+    val vPlus = new Array[Double](nRes) // one view's stepped residuals
+    val vMinus = new Array[Double](nRes)
     while (iter < maxIter && !converged) {
-      // central-difference Jacobian, step scaled per parameter
-      val jac = Array.ofDim[Double](nRes, nParams)
-      for (j <- 0 until nParams) {
-        val h = 1e-6 * math.max(math.abs(p(j)), 1e-3)
-        val pp = p.clone(); pp(j) += h
-        val pm = p.clone(); pm(j) -= h
-        val rp = residuals(pp); val rm = residuals(pm)
-        var i = 0
-        while (i < nRes) { jac(i)(j) = (rp(i) - rm(i)) / (2 * h); i += 1 }
+      // central-difference Jacobian, step scaled per parameter; row i's
+      // 15 non-zeros: jac(i)(0..8) shared, jac(i)(9..14) its view's pose
+      val jac = Array.ofDim[Double](nRes, 15)
+      def stepSize(j: Int) = 1e-6 * math.max(math.abs(p(j)), 1e-3)
+      def stepped(j: Int, h: Double) = { val q = p.clone(); q(j) += h; q }
+      for (j <- 0 until 9) { // shared: every view's residuals move
+        val h = stepSize(j)
+        val rp = residuals(stepped(j, h)); val rm = residuals(stepped(j, -h))
+        for (i <- 0 until nRes) jac(i)(j) = (rp(i) - rm(i)) / (2 * h)
       }
+      val cam = bundleCamera(p)
+      for (v <- 0 until nViews; c <- 0 until 6) { // only view v's move
+        val j = 9 + 6 * v + c
+        val h = stepSize(j)
+        viewResiduals(stepped(j, h), cam, v, vPlus)
+        viewResiduals(stepped(j, -h), cam, v, vMinus)
+        for (i <- first(v) until first(v + 1))
+          jac(i)(9 + c) = (vPlus(i) - vMinus(i)) / (2 * h)
+      }
+
       val jtj = Array.ofDim[Double](nParams, nParams)
       val jtr = new Array[Double](nParams)
-      var i = 0
-      while (i < nRes) {
-        val row = jac(i); val ri = r(i)
-        var a = 0
-        while (a < nParams) {
-          jtr(a) += row(a) * ri
-          var b = a
-          while (b < nParams) { jtj(a)(b) += row(a) * row(b); b += 1 }
-          a += 1
+      val cols = new Array[Int](15) // row-local column -> parameter index
+      (0 until 9).foreach(a => cols(a) = a)
+      var v = 0
+      while (v < nViews) {
+        (0 until 6).foreach(c => cols(9 + c) = 9 + 6 * v + c)
+        var i = first(v)
+        while (i < first(v + 1)) {
+          val row = jac(i); val ri = r(i)
+          var a = 0
+          while (a < 15) {
+            val ja = jtj(cols(a))
+            jtr(cols(a)) += row(a) * ri
+            var b = a
+            while (b < 15) { ja(cols(b)) += row(a) * row(b); b += 1 }
+            a += 1
+          }
+          i += 1
         }
-        i += 1
+        v += 1
       }
       for (a <- 0 until nParams; b <- 0 until a) jtj(a)(b) = jtj(b)(a)
 
@@ -374,29 +406,26 @@ object Intrinsic {
   // 4. distributed reprojection error + the composite
   // ------------------------------------------------------------------
 
-  /** camera_calib.py:104-113 as a distributed plan: per-view
-    * L2-norm-of-residuals / #points, then the mean across views (A4 /
-    * A2 two-level shape). All per-point math is Catalyst expressions;
-    * the per-view poses ride in on a broadcast join.
+  /** camera_calib.py:104-113 as a distributed plan: each corner's
+    * squared residual in one typed map (the per-view poses ride in the
+    * task closure as data), then per-view L2-norm-of-residuals / #points
+    * and the mean across views as DataFrame aggregates (A4 / A2
+    * two-level shape). Corners of a view not in `views` are dropped.
     */
   def meanReprojError(corners: DataFrame, k: Seq[Double], dist: Seq[Double],
       views: Seq[ViewPose]): Double = {
     val spark = corners.sparkSession
     import spark.implicits._
-    val vdf = views.map(v =>
-      (v.viewId, v.rvec(0), v.rvec(1), v.rvec(2),
-        v.tvec(0), v.tvec(1), v.tvec(2)))
-      .toDF("view_id", "r0", "r1", "r2", "t0", "t1", "t2")
-    val j = corners.join(broadcast(vdf), "view_id")
-    val m = Geometry.rodrigues(col("r0"), col("r1"), col("r2"))
-    val (x, y) = (col("x"), col("y")) // board plane, z = 0
-    val xc = m(0)(0) * x + m(0)(1) * y + col("t0")
-    val yc = m(1)(0) * x + m(1)(1) * y + col("t1")
-    val zc = m(2)(0) * x + m(2)(1) * y + col("t2")
-    val (u, v) = Geometry.projectPointCv(xc, yc, zc, k, dist)
-    val du = u - col("u"); val dv = v - col("v")
-    j.groupBy("view_id")
-      .agg((sqrt(sum(du * du + dv * dv)) / count(lit(1))).as("view_err"))
+    val ker = BoardKernel(Geometry.CvCamera(k, dist), views.map(v =>
+      v.viewId -> (Extrinsic.rodriguesScalar(v.rvec), v.tvec.toArray)).toMap)
+    corners.select(col("view_id"), col("u").cast("double"),
+        col("v").cast("double"), col("x").cast("double"),
+        col("y").cast("double"))
+      .as[(String, Double, Double, Double, Double)]
+      .flatMap(c => ker.squaredResidual(c))
+      .toDF("view_id", "sq")
+      .groupBy("view_id")
+      .agg((sqrt(sum("sq")) / count(lit(1))).as("view_err"))
       .agg(avg("view_err")).collect()(0).getDouble(0)
   }
 
@@ -446,5 +475,26 @@ object Intrinsic {
     val k = Seq(p(0) / detectScale, 0.0, p(2) / detectScale,
       0.0, p(1) / detectScale, p(3) / detectScale, 0.0, 0.0, 1.0)
     Result(k, dist14, views, err)
+  }
+}
+
+/** Per-corner math of `Intrinsic.meanReprojError`, kept outside `object
+  * Intrinsic` so a task closure captures only the camera and the per-view
+  * poses (view_id -> (row-major R, t)).
+  */
+private[graft] final case class BoardKernel(cam: Geometry.CvCamera,
+    poses: Map[String, (Array[Double], Array[Double])]) {
+
+  /** (view_id, du² + dv²) of one (view_id, u, v, x, y) corner, or None
+    * when its view has no pose.
+    */
+  def squaredResidual(c: (String, Double, Double, Double, Double))
+      : Option[(String, Double)] = {
+    val (id, u, v, x, y) = c
+    poses.get(id).map { case (r9, t) =>
+      val (pu, pv) = Intrinsic.projectBoard(cam, r9, t, x, y)
+      val du = pu - u; val dv = pv - v
+      (id, du * du + dv * dv)
+    }
   }
 }

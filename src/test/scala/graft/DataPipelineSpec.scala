@@ -65,9 +65,9 @@ class DataPipelineSpec extends SparkSpec {
     val calib = views.zipWithIndex.flatMap { case ((rv, tv), i) =>
       val r9 = Extrinsic.rodriguesScalar(rv)
       objp.map { case (ci, xw, yw) =>
-        val (u, v) = Intrinsic.projectCvScalar(
+        val (u, v) = Intrinsic.projectBoard(graft.ops.Geometry.CvCamera(
           goldK(0) * 0.5, goldK(4) * 0.5, goldK(2) * 0.5, goldK(5) * 0.5,
-          dist8, r9, tv.toArray, xw, yw)
+          dist8.toSeq), r9, tv.toArray, xw, yw)
         (f"v$i%02d", ci, u, v, xw, yw)
       }
     }.toDF("view_id", "corner_idx", "u", "v", "x", "y")

@@ -57,12 +57,44 @@ class ExtrinsicSpec extends SparkSpec {
     val perturbed = Seq(rvec(0) + 0.02, rvec(1) - 0.015, rvec(2) + 0.01,
       tvec(0) + 8.0, tvec(1) - 6.0, tvec(2) + 15.0)
     val c = corners.cache()
-    val (p, _) = Extrinsic.refine(c, arr("k"), arr("dist"), perturbed)
+    val (p, cost) = Extrinsic.refine(c, arr("k"), arr("dist"), perturbed)
     val rmse = Extrinsic.reprojectionStats(
       c, arr("k"), arr("dist"), Extrinsic.paramsToT(p))("rmse")
     val storedRmse = cam.getAs[Double]("stat_rmse")
     assert(rmse <= storedRmse + 1e-3,
       s"refined rmse $rmse vs stored $storedRmse")
+    // pinned: the optimum and cost the Catalyst-expression solver (one
+    // normal_eq_agg aggregation per step) reached from this start
+    val pinned = Seq(0.005209598498021966, 0.0030734037622863804,
+      3.1329808147903537, 46.88624494818494, 20.267218262205283,
+      1590.0193100456563)
+    p.zip(pinned).foreach { case (got, want) =>
+      assert(math.abs(got - want) <= 1e-9 * math.abs(want),
+        s"refined params $p drifted from $pinned")
+    }
+    val pinnedCost = 2.756222524078767e7
+    assert(math.abs(cost - pinnedCost) <= 1e-9 * pinnedCost,
+      s"refined cost $cost vs pinned $pinnedCost")
+  }
+
+  test("typed normal-equation pass equals SQL normal_eq_agg on the fixture") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.expr
+    graft.expr.GraftFunctions.register(spark)
+    val p = (arr("rvec") ++ arr("tvec")).toArray
+    val ker = Extrinsic.lmKernel(
+      graft.ops.Geometry.CvCamera(arr("k"), arr("dist")), p, 1e-6)
+    val obs = Extrinsic.observations(corners, quantize = false)
+    val typed = Extrinsic.normalEquations(obs.rdd, ker)
+    val names = Seq("ru", "rv") ++ (0 until 6).flatMap(i => Seq(s"j${i}u", s"j${i}v"))
+    val terms = obs.map(o => ker.terms(o)).toDF("t")
+      .select(names.indices.map(i => $"t"(i).as(names(i))): _*)
+    val sql = terms.agg(expr(s"normal_eq_agg(${names.mkString(", ")})"))
+      .collect()(0).getSeq[Double](0)
+    assert(typed.length == 28 && sql.length == 28)
+    typed.zip(sql).zipWithIndex.foreach { case ((a, b), i) =>
+      assert(a == b, s"entry $i: typed $a vs normal_eq_agg $b")
+    }
   }
 
   test("planar-PnP init (mapGroups) lands close enough for refinement") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Geometry
 import graft.pipeline.{Extrinsic, Intrinsic}
 
 /** Golden test for the Zhang intrinsic-calibration composite
@@ -49,9 +50,9 @@ class IntrinsicSpec extends SparkSpec {
     val rows = goldViews.zipWithIndex.flatMap { case ((rv, tv), i) =>
       val r9 = Extrinsic.rodriguesScalar(rv)
       objp.map { case (ci, xw, yw) =>
-        val (u, v) = Intrinsic.projectCvScalar(
+        val (u, v) = Intrinsic.projectBoard(Geometry.CvCamera(
           goldFx * 0.5, goldFy * 0.5, goldCx * 0.5, goldCy * 0.5,
-          goldDist8, r9, tv.toArray, xw, yw)
+          goldDist8.toSeq), r9, tv.toArray, xw, yw)
         (f"v$i%02d", ci, u, v, xw, yw)
       }
     }
@@ -105,6 +106,97 @@ class IntrinsicSpec extends SparkSpec {
     }
   }
 
+  test("refineBundle's block-sparse Jacobian returns the dense solve exactly") {
+    // the synthetic views as calibrate collects them: (X, Y, u, v) per
+    // view, initialized from per-view DLT homographies + Zhang's K
+    val objp = Intrinsic.objectPoints(9, 11, 45.0)
+    val viewPts = goldViews.map { case (rv, tv) =>
+      val r9 = Extrinsic.rodriguesScalar(rv)
+      val cam = Geometry.CvCamera(goldFx * 0.5, goldFy * 0.5, goldCx * 0.5,
+        goldCy * 0.5, goldDist8.toSeq)
+      objp.map { case (_, xw, yw) =>
+        val (u, v) = Intrinsic.projectBoard(cam, r9, tv.toArray, xw, yw)
+        (xw, yw, u, v)
+      }
+    }.toIndexedSeq
+    val hs = viewPts.map(Intrinsic.homographyDLT)
+    val (fx0, fy0, cx0, cy0) = Intrinsic.zhangInitK(hs)
+    val init = Array(fx0, fy0, cx0, cy0, 0.0, 0.0, 0.0, 0.0, 0.0) ++
+      hs.flatMap { h =>
+        val (rv, tv) = Intrinsic.extrinsicFromH(h, fx0, fy0, cx0, cy0)
+        rv ++ tv
+      }
+    val got = Intrinsic.refineBundle(viewPts, init, maxIter = 20)
+    val want = denseRefineBundle(viewPts, init, maxIter = 20)
+    got.indices.foreach(i =>
+      assert(got(i) == want(i), s"param $i: ${got(i)} vs dense ${want(i)}"))
+  }
+
+  /** The dense-Jacobian LM the bundle used before it went block-sparse:
+    * every one of the 9 + 6V columns re-projects every view, and J^T J is
+    * accumulated over all columns of every row.
+    */
+  private def denseRefineBundle(
+      viewPts: IndexedSeq[Seq[(Double, Double, Double, Double)]],
+      init: Array[Double], maxIter: Int): Array[Double] = {
+    val nParams = 9 + 6 * viewPts.length
+    def residuals(p: Array[Double]): Array[Double] = {
+      val cam = Geometry.CvCamera(p(0), p(1), p(2), p(3),
+        Seq(p(4), p(5), p(6), p(7), 0.0, 0.0, 0.0, p(8)))
+      viewPts.indices.flatMap { v =>
+        val b = 9 + 6 * v
+        val r9 = Extrinsic.rodriguesScalar(Seq(p(b), p(b + 1), p(b + 2)))
+        val t = Array(p(b + 3), p(b + 4), p(b + 5))
+        viewPts(v).flatMap { case (xw, yw, u, vv) =>
+          val (up, vp) = Intrinsic.projectBoard(cam, r9, t, xw, yw)
+          Seq(up - u, vp - vv)
+        }
+      }.toArray
+    }
+    var p = init.clone()
+    var r = residuals(p)
+    var cost = r.map(x => x * x).sum
+    var lambda = 1e-3
+    var iter = 0
+    var converged = false
+    while (iter < maxIter && !converged) {
+      val jac = Array.ofDim[Double](r.length, nParams)
+      for (j <- 0 until nParams) {
+        val h = 1e-6 * math.max(math.abs(p(j)), 1e-3)
+        val pp = p.clone(); pp(j) += h
+        val pm = p.clone(); pm(j) -= h
+        val rp = residuals(pp); val rm = residuals(pm)
+        r.indices.foreach(i => jac(i)(j) = (rp(i) - rm(i)) / (2 * h))
+      }
+      val jtj = Array.ofDim[Double](nParams, nParams)
+      val jtr = new Array[Double](nParams)
+      for (i <- r.indices; a <- 0 until nParams) {
+        jtr(a) += jac(i)(a) * r(i)
+        for (b <- a until nParams) jtj(a)(b) += jac(i)(a) * jac(i)(b)
+      }
+      for (a <- 0 until nParams; b <- 0 until a) jtj(a)(b) = jtj(b)(a)
+      var accepted = false
+      var tries = 0
+      while (!accepted && tries < 10) {
+        val damped = Array.tabulate(nParams, nParams)((a, b) =>
+          jtj(a)(b) + (if (a == b) lambda * math.max(jtj(a)(a), 1e-12) else 0.0))
+        val step = Intrinsic.solveN(damped, jtr.map(-_))
+        val cand = Array.tabulate(nParams)(a => p(a) + step(a))
+        val rc = residuals(cand)
+        val cc = rc.map(x => x * x).sum
+        if (cc < cost) {
+          if (cost - cc < 1e-12 * math.max(cost, 1e-12)) converged = true
+          p = cand; r = rc; cost = cc
+          lambda = math.max(lambda / 3, 1e-12)
+          accepted = true
+        } else { lambda *= 10; tries += 1 }
+      }
+      if (!accepted) converged = true
+      iter += 1
+    }
+    p
+  }
+
   test("zhangInitK lands in the convergence basin (no distortion case)") {
     import spark.implicits._
     val objp = Intrinsic.objectPoints(9, 11, 45.0)
@@ -112,9 +204,9 @@ class IntrinsicSpec extends SparkSpec {
     val rows = goldViews.zipWithIndex.flatMap { case ((rv, tv), i) =>
       val r9 = Extrinsic.rodriguesScalar(rv)
       objp.map { case (ci, xw, yw) =>
-        val (u, v) = Intrinsic.projectCvScalar(
+        val (u, v) = Intrinsic.projectBoard(Geometry.CvCamera(
           goldFx * 0.5, goldFy * 0.5, goldCx * 0.5, goldCy * 0.5,
-          noDist, r9, tv.toArray, xw, yw)
+          noDist.toSeq), r9, tv.toArray, xw, yw)
         (f"v$i%02d", ci, u, v, xw, yw)
       }
     }

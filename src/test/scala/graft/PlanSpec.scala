@@ -170,10 +170,18 @@ class PlanSpec extends SparkSpec {
     val p = plan("x14_se3_inverse")
     val exIdx = p.indexOf("Exchange rangepartitioning")
     assert(exIdx >= 0, s"x14 lost its range exchange:\n${p.take(1200)}")
+    // the global sort must stay directly above the range exchange, with
+    // the trig computed above the sort
+    val sortIdx = p.lastIndexOf("Sort [", exIdx)
+    assert(sortIdx >= 0 && !p.substring(sortIdx, exIdx).contains("Project"),
+      s"x14 lost the Sort above its range exchange:\n${p.take(1200)}")
     assert(!p.substring(exIdx).contains("SIN("),
       s"x14 trig slipped below the range exchange:\n${p.take(1200)}")
-    assert(p.indexOf("SIN(") >= 0 && p.indexOf("SIN(") < exIdx,
-      s"x14 trig not computed above the exchange:\n${p.take(1200)}")
+    // anchored on the staged-trig shape as the plan prints it: each
+    // angle's sin/cos is its own SIN(RADIANS(angle)) column
+    val trigIdx = p.indexOf("SIN(RADIANS(")
+    assert(trigIdx >= 0 && trigIdx < sortIdx,
+      s"x14 staged trig not computed above the sort:\n${p.take(1200)}")
   }
 
   test("w9: scalable ordinal has no single-partition Window task") {
